@@ -17,8 +17,10 @@ import org.apache.spark.sql.types.StructType
   * micro-batches of DataFrames.
   *
   * Scale notes: the only per-row work is Catalyst projections (transform,
-  * coercion) and one hash repartition on the sink key before write — the
-  * same single shuffle the reference performs (PrePartitionOperator).
+  * coercion) and one hash repartition on the sink key per sink write —
+  * the same single shuffle the reference performs (PrePartitionOperator).
+  * A batch makes one write per sink table: shards routed to one sink
+  * union into one changelog first.
   * All control-plane work (routing, schema merge, DDL) is O(#tables) on
   * the driver, never O(rows).
   */
@@ -92,12 +94,12 @@ final class PipelineRunner(
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil))
   private val router = new TableIdRouter(pipeline.routes, pipeline.routeMode)
 
-  /** How many sink tables a source table's rows fan out to — each routed
-    * sink is one independent write action over the decoded frame, which
-    * is what the streaming fast path needs to know (a single consumer
-    * makes the unpersisted __seq self-consistent unconditionally).
+  /** The sink tables a source table's rows route to — the edges of the
+    * table→sink graph the streaming loop cuts DDL segments over (tables
+    * sharing a sink are cut together), and, summed over the tables, the
+    * number of source passes a micro-batch's writes make.
     */
-  def routeFanOut(tableId: TableId): Int = router.route(tableId).size
+  def sinksOf(tableId: TableId): Seq[TableId] = router.route(tableId)
   // UPSTREAM schema per source table (what the database sends), distinct
   // from the registry's SINK plane: projected-table DDL derivation diffs
   // the projection's output under the old vs new upstream schema
@@ -349,46 +351,56 @@ final class PipelineRunner(
     finally restoreSessionZone()
   }
 
+  /** Apply one batch: its DDL in order, then its data with ONE write per
+    * sink table. Each source table's frame is transformed, exploded and
+    * coerced onto every routed sink's schema; the frames routed to one
+    * sink union into a single changelog, so N shards merged into one
+    * table cost one pre-partition shuffle and one sink merge, not N.
+    * Per-key order stays last-`__seq`-wins inside the sink, so a key that
+    * collides across shards resolves in log order.
+    */
   def processBatch(batch: SourceBatch): Unit = {
     batch.schemaChanges.foreach(handleSchemaChange)
     if (pipeline.batchMode && !batchCreatesEmitted && batch.data.nonEmpty) {
       emitMergedBatchCreates()
       batchCreatesEmitted = true
     }
-    batch.data.foreach { case (tableId, paired) =>
-      val transformed = engine.transformChangelog(tableId, paired)
-      router.route(tableId).foreach { sinkId =>
-        val info = registry.evolvedInfo(sinkId).getOrElse(
-          throw new IllegalStateException(s"no CreateTable seen for $sinkId"))
-        val exploded = Changelog.explode(transformed)
-        val coerced = coerceExploded(exploded, info.schema)
-        // PrePartition analog (RegularPrePartitionOperator): hash-distribute
-        // per the configured strategy so each sink partition owns a
-        // disjoint key set (the SINK_DEFINED-only validation for
-        // key-declaring sinks already ran at construction, below the
-        // class body — compose time, like the reference)
-        val sinkKeys = sink.sinkDefinedPartitionKeys(sinkId, info)
-        val partitioned =
-          if (pipeline.parallelism <= 1) coerced
-          else pipeline.partitionStrategy match {
-            case PartitionStrategy.PrimaryKey if info.primaryKeys.nonEmpty =>
-              coerced.repartition(pipeline.parallelism, info.primaryKeys.map(col): _*)
-            case PartitionStrategy.TableIdHash =>
-              coerced.repartition(pipeline.parallelism, lit(sinkId.identifier))
-            case PartitionStrategy.SinkDefined(explicit) =>
-              // explicit keys from the pipeline def win; otherwise the
-              // sink's declared keys; otherwise the default provider
-              // (primary-key hashing — DefaultDataChangeEventHashFunctionProvider)
-              val keys = Some(explicit).filter(_.nonEmpty)
-                .orElse(sinkKeys.filter(_.nonEmpty))
-                .getOrElse(info.primaryKeys)
-              if (keys.nonEmpty)
-                coerced.repartition(pipeline.parallelism, keys.map(col): _*)
-              else coerced
-            case _ => coerced
-          }
-        sink.write(sinkId, partitioned, info)
-      }
+    def sinkInfo(sinkId: TableId): TableInfo = registry.evolvedInfo(sinkId).getOrElse(
+      throw new IllegalStateException(s"no CreateTable seen for $sinkId"))
+    val routed = batch.data.flatMap { case (tableId, paired) =>
+      val exploded = Changelog.explode(engine.transformChangelog(tableId, paired))
+      router.route(tableId).map(sinkId =>
+        sinkId -> coerceExploded(exploded, sinkInfo(sinkId).schema))
+    }
+    routed.map(_._1).distinct.foreach { sinkId =>
+      val info = sinkInfo(sinkId)
+      val coerced = routed.collect { case (`sinkId`, df) => df }.reduce(_ unionByName _)
+      // PrePartition analog (RegularPrePartitionOperator): hash-distribute
+      // per the configured strategy so each sink partition owns a
+      // disjoint key set (the SINK_DEFINED-only validation for
+      // key-declaring sinks already ran at construction, below the
+      // class body — compose time, like the reference)
+      val sinkKeys = sink.sinkDefinedPartitionKeys(sinkId, info)
+      val partitioned =
+        if (pipeline.parallelism <= 1) coerced
+        else pipeline.partitionStrategy match {
+          case PartitionStrategy.PrimaryKey if info.primaryKeys.nonEmpty =>
+            coerced.repartition(pipeline.parallelism, info.primaryKeys.map(col): _*)
+          case PartitionStrategy.TableIdHash =>
+            coerced.repartition(pipeline.parallelism, lit(sinkId.identifier))
+          case PartitionStrategy.SinkDefined(explicit) =>
+            // explicit keys from the pipeline def win; otherwise the
+            // sink's declared keys; otherwise the default provider
+            // (primary-key hashing — DefaultDataChangeEventHashFunctionProvider)
+            val keys = Some(explicit).filter(_.nonEmpty)
+              .orElse(sinkKeys.filter(_.nonEmpty))
+              .getOrElse(info.primaryKeys)
+            if (keys.nonEmpty)
+              coerced.repartition(pipeline.parallelism, keys.map(col): _*)
+            else coerced
+          case _ => coerced
+        }
+      sink.write(sinkId, partitioned, info)
     }
   }
 }

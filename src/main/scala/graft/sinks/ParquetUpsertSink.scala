@@ -287,18 +287,17 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
           val tmp = p + "__batch"
           batch.repartition(col(BucketCol))
             .write.mode(SaveMode.Overwrite).partitionBy(BucketCol).parquet(tmp)
-          (spark.read.parquet(tmp), listBuckets(tmp), Some(tmp))
+          (spark.read.schema(batch.schema).parquet(tmp), listBuckets(tmp), Some(tmp))
         } else {
           val t = batch.select(col(BucketCol)).distinct().collect().map(_.getInt(0)).toSeq
           (batch, t, None)
         }
       if (touched.isEmpty) { tmpBatch.foreach(t => deleteRecursively(new java.io.File(t))); return }
 
-      // read ONLY the touched buckets — partition pruning keeps untouched
-      // directories off the scan entirely
-      val cur = spark.read.parquet(p).where(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
+      // read ONLY the touched buckets, at the table's current schema
+      val cur = readBase(p, touched, Some(target))
       // existing rows rank below every batch change (seq -1)
-      val curCl = bucketOf(SchemaMerging.coerce(cur.drop(BucketCol), target))
+      val curCl = bucketOf(cur)
         .withColumn(Changelog.OpCol, lit("+I"))
         .withColumn(Changelog.SeqCol, lit(-1L))
       val merged = Changelog.materialize(curCl.unionByName(staged), info.primaryKeys)
@@ -307,6 +306,59 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
       commitSwap(p, written, removeMissing = touched.filterNot(written.contains))
       tmpBatch.foreach(t => deleteRecursively(new java.io.File(t)))
     }
+  }
+
+  /** Current base rows of the given buckets of table dir `p`, read with
+    * explicit schemas. A bucket dir is always written whole, by one
+    * merge, so its files share the schema of that write: buckets group by
+    * the schema in their first file's footer (driver-side, no
+    * schema-inference job), each group reads with its own schema
+    * (partition pruning keeps other buckets off the scan) and coerces
+    * onto `target`. Buckets last rewritten before and after an ALTER
+    * (INT→BIGINT, ADD COLUMN, …) therefore read together at the evolved
+    * shape; a single inferred read would take one file's schema for all.
+    * `target` None = the least-common schema of the groups.
+    */
+  private def readBase(p: String, buckets: Seq[Int],
+      target: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val groups = buckets.map(b => b -> new java.io.File(p, s"$BucketCol=$b"))
+      .filter(_._2.isDirectory) // a touched bucket may be new to the table
+      .groupMap(bd => footerSchema(bd._2, conf))(_._1)
+      .toSeq.sortBy(_._2.min)
+    val to = target.getOrElse(SchemaMerging.leastCommonSchema(groups.map(_._1)))
+    groups.map { case (schema, bs) =>
+      val withBucket = schema.add(BucketCol, org.apache.spark.sql.types.IntegerType)
+      SchemaMerging.coerce(spark.read.schema(withBucket).parquet(p)
+        .where(col(BucketCol).isin(bs.map(Integer.valueOf): _*)), to)
+    }.reduceOption(_ unionByName _)
+      .getOrElse(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], to))
+  }
+
+  /** The Spark schema a bucket dir's data was written with: the row
+    * metadata Spark stores in every parquet footer it writes. Reads the
+    * file metadata only (no row groups) — ~0.5 ms a footer, where opening
+    * a full `ParquetFileReader` costs ~6 ms.
+    */
+  private def footerSchema(bucketDir: java.io.File,
+      conf: org.apache.hadoop.conf.Configuration): org.apache.spark.sql.types.StructType = {
+    val f = Option(bucketDir.listFiles()).toSeq.flatten
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+      .minBy(_.getName)
+    val path = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
+    val opts = org.apache.parquet.HadoopReadOptions.builder(conf, path)
+      .withMetadataFilter(
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      .build()
+    val stream = in.newStream()
+    val footer =
+      try org.apache.parquet.hadoop.ParquetFileReader.readFooter(in, opts, stream)
+      finally stream.close()
+    org.apache.spark.sql.types.DataType.fromJson(footer.getFileMetaData
+        .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
   }
 
   private def listBuckets(dir: String): Seq[Int] =
@@ -422,25 +474,26 @@ final class ParquetUpsertSink(spark: SparkSession, baseDir: String,
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
+    val base = if (baseExists) Some(readBase(p, listBuckets(p), None)) else None
     if (dirs.isEmpty) {
-      spark.read.parquet(p).drop(BucketCol)
+      base.get
     } else {
       val pks = readMeta(p).flatMap(_.get("pks"))
         .map(_.split(",").filter(_.nonEmpty).toSeq)
         .getOrElse(throw new IllegalStateException(s"no pk marker for $tableId"))
       val deltas = readDeltasWidened(dirs)
-      val all =
-        if (!baseExists) deltas
-        else {
-          val base = spark.read.parquet(p).drop(BucketCol)
+      val all = base match {
+        case None => deltas
+        case Some(b) =>
+          val baseCl = b
             .withColumn(Changelog.OpCol, lit("+I"))
             .withColumn(Changelog.SeqCol, lit(-1L))
           // base written before a schema change lacks added columns (and
           // vice versa after compaction) — widen both sides
-          val target = SchemaMerging.leastCommonSchema(Seq(base.schema, deltas.schema))
-          SchemaMerging.coerce(base, target)
+          val target = SchemaMerging.leastCommonSchema(Seq(baseCl.schema, deltas.schema))
+          SchemaMerging.coerce(baseCl, target)
             .unionByName(SchemaMerging.coerce(deltas, target))
-        }
+      }
       Changelog.materialize(all, pks)
     }
   }

@@ -122,8 +122,9 @@ final class StreamingPipeline(
     * (the reference's Kafka pipeline source and the MySQL source both
     * multiplex every captured table onto one feed). Each record routes by
     * its envelope's `source.table`; every table keeps its own upstream
-    * schema plane and its own DDL segmentation, so an ALTER TABLE on one
-    * table never re-decodes or blocks the others.
+    * schema plane. An ALTER TABLE cuts the batch only for the tables that
+    * share a sink with the altered one (they are written together), so it
+    * never re-decodes or blocks tables routed elsewhere.
     */
   def startMultiFromDebeziumJson(
       jsonStream: DataFrame,
@@ -366,8 +367,9 @@ final class StreamingPipeline(
   }
 
   /** The shared micro-batch loop: sequence, split out DDL envelopes,
-    * decode data segments with the schema valid at their log position,
-    * checkpoint both schema planes.
+    * cut the data at the DDL positions of each group of tables sharing a
+    * sink, decode every segment with the schema valid at its log position
+    * and write it once per sink, checkpoint both schema planes.
     */
   private def startFromJsonLines(
       jsonStream: DataFrame,
@@ -390,18 +392,6 @@ final class StreamingPipeline(
     val created = scala.collection.mutable.Set[TableId](
       (tables.map(_._1) ++ dynamicTables.keys)
         .filter(runner.registry.evolvedInfo(_).isDefined): _*)
-    // per-phase wall clock inside the micro-batch, printed when
-    // SPARK_GRAFT_STREAM_PROFILE=1 — the breakdown that locates the
-    // steady-state eps bound (driver control plane vs decode+write)
-    val prof = sys.env.get("SPARK_GRAFT_STREAM_PROFILE").contains("1")
-    def timed[T](name: String)(f: => T): T =
-      if (!prof) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[stream-prof] $name%-14s ${(System.nanoTime() - t0) / 1e6}%6.1f ms")
-        r
-      }
     val writer = jsonStream.writeStream
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epochId: Long) =>
@@ -462,28 +452,30 @@ final class StreamingPipeline(
         // above). The probe is the contains()-guarded __ddl scan with an
         // isEmpty early exit, so data batches pay substring scans, never
         // JSON parses. Any DDL present falls back to the persist-first
-        // path: segmentation runs several isEmpty actions per table over
-        // the same frame, where the cached copy earns its cost.
+        // path: segmentation counts rows per (table, segment) and then
+        // reads every segment back from the same frame, where the cached
+        // copy earns its cost.
         val oneAction = !multi && tables.size == 1 &&
-          runner.routeFanOut(tables.head._1) == 1
-        // Each consuming action of the UNPERSISTED frame re-reads the
-        // source and re-runs the decode (and, multi-table, the routing
-        // JSON probe): R routed actions cost R decode passes where the
+          runner.sinksOf(tables.head._1).size == 1
+        // Each routed (table, sink) pair scans the UNPERSISTED frame once
+        // and re-runs the decode (and, multi-table, the routing JSON
+        // probe) — whether its sink's write unions it with other shards or
+        // not: R routed source passes cost R decode passes where the
         // persist path costs 1 decode + cache build + R cached filters.
         // Measured at 4 tables the unpersisted passes still win (88-99k
         // vs ~66k ev/s), but the trade inverts with table count — a
         // 200-table whole-database topic would pay 200 probe passes per
         // batch — so the deterministic-order fast path is capped at a
-        // bounded action fan-out and persists beyond it.
-        // wire-captured tables (dynamicTables) consume actions too — a
+        // bounded number of source passes and persists beyond it.
+        // wire-captured tables (dynamicTables) pass over the source too — a
         // whole-database topic that grew 200 captured tables must fall
         // back to persist even though only 1 table was declared
-        val consumingActions =
+        val sourcePasses =
           (tables.iterator.map(_._1) ++ dynamicTables.keysIterator)
-            .toSet.iterator.map(runner.routeFanOut).sum
+            .toSet.iterator.map((t: TableId) => runner.sinksOf(t).size).sum
         val fastPath = (oneAction || (order.isDefined &&
-            consumingActions <= StreamingPipeline.FastPathMaxActions)) &&
-          timed("ddl-probe")(stamped.where(col("__ddl").isNotNull).isEmpty)
+            sourcePasses <= StreamingPipeline.FastPathMaxActions)) &&
+          stamped.where(col("__ddl").isNotNull).isEmpty
         val sequenced =
           if (fastPath) stamped
           else {
@@ -500,22 +492,20 @@ final class StreamingPipeline(
         // log says it does (the micro-batch boundary alone is no longer
         // the only DDL barrier).
         val allDdl = if (fastPath) Array.empty[org.apache.spark.sql.Row]
-        else timed("cache+ddl") {
-          sequenced.where(col("__ddl").isNotNull)
-            .select(col(Changelog.SeqCol), col("__ddl"),
-              (if (multi) col(StreamingPipeline.RoutingCol)
-               else DebeziumJson.ddlTableOf(col("value"))).as("__tbl"),
-              coalesce(
-                get_json_object(col("value"), "$.source.db"),
-                get_json_object(col("value"), "$.database")).as("__db"))
-            .collect()
-            .sortBy(_.getLong(0))
-        }
+        else sequenced.where(col("__ddl").isNotNull)
+          .select(col(Changelog.SeqCol), col("__ddl"),
+            (if (multi) col(StreamingPipeline.RoutingCol)
+             else DebeziumJson.ddlTableOf(col("value"))).as("__tbl"),
+            coalesce(
+              get_json_object(col("value"), "$.source.db"),
+              get_json_object(col("value"), "$.database")).as("__db"))
+          .collect()
+          .sortBy(_.getLong(0))
         val data = sequenced.where(col("__ddl").isNull)
 
         // Newly-added-table capture: a wire CREATE TABLE naming an
         // undeclared table registers it for this and later batches. The
-        // CREATE itself applies at its log position through the per-table
+        // CREATE itself applies at its log position through the segment
         // DDL loop below (it is THE creation event — no synthesis).
         if (multi && newlyAddedCapture) {
           val knownIds = tables.map(_._1) ++ dynamicTables.keys
@@ -541,67 +531,103 @@ final class StreamingPipeline(
         }
 
         val activeTables = tables ++ dynamicTables.toSeq
+        val infoOf = activeTables.toMap
+        // a DDL row names a table by (table, db); DDL naming no table at
+        // all is accepted only in single-table mode (ambiguous on a
+        // shared topic)
+        def names(r: org.apache.spark.sql.Row, tableId: TableId): Boolean = {
+          val matches = !r.isNullAt(2) && StreamingPipeline.idMatches(
+            tableId, r.getString(2), Option(r.getString(3)))
+          if (multi) matches else r.isNullAt(2) || matches
+        }
 
         activeTables.foreach { case (tableId, info) =>
-          // On a single-table stream every record is this table's; on a
-          // multi-table topic, route by the materialized envelope table.
-          // DDL naming no table at all is accepted only in single-table
-          // mode (ambiguous on a shared topic).
-          val tblData =
-            if (multi) StreamingPipeline.routeByTableId(data, tableId)
-            else data
-          val ddlRows = allDdl.filter { r =>
-            val matches = !r.isNullAt(2) && StreamingPipeline.idMatches(
-              tableId, r.getString(2), Option(r.getString(3)))
-            if (multi) matches else r.isNullAt(2) || matches
-          }
-
           if (!created.contains(tableId)) {
             created += tableId
             upstream.apply(CreateTableEvent(tableId, info))
             runner.processBatch(SourceBatch(Seq(CreateTableEvent(tableId, info)), Nil))
           }
-
-          def emit(segment: DataFrame): Unit = {
-            // decode with the CURRENT upstream schema (what the database is
-            // sending now — NOT the runner's transformed sink plane): columns
-            // added/renamed by earlier DDL in this very batch parse from this
-            // row on
-            val cur = upstream.evolvedInfo(tableId).getOrElse(info)
-            timed("decode+write") {
-              runner.processBatch(
-                SourceBatch(Nil, Seq(tableId -> decodeSegment(segment, cur.schema))))
-            }
-          }
-
-          if (ddlRows.isEmpty) emit(tblData)
-          else {
-            var lower = Long.MinValue
-            ddlRows.foreach { r =>
-              val at = r.getLong(0)
-              val segment = tblData.where(
-                col(Changelog.SeqCol) > lower && col(Changelog.SeqCol) < at)
-              if (!segment.isEmpty) emit(segment)
-              // an unparseable statement must not kill the stream — log and
-              // keep consuming (the reference's history replay does the same
-              // for statements it cannot interpret)
-              val events =
-                try DdlParser.parse(r.getString(1), tableId, ddlTypes)
-                catch { case e: Exception =>
-                  System.err.println(s"[graft] skipping unparseable DDL at seq $at: " +
-                    s"${r.getString(1).take(200)} (${e.getMessage})")
-                  Nil
-                }
-              events.foreach(upstream.apply)
-              runner.processBatch(SourceBatch(events, Nil))
-              lower = at
-            }
-            val tail = tblData.where(col(Changelog.SeqCol) > lower)
-            if (!tail.isEmpty) emit(tail)
-          }
         }
+
+        // Rows per (table, segment) for the whole batch in ONE grouped
+        // count, O(#tables × #DDL) driver rows: segment g holds the data
+        // rows after the g-th DDL position and before the next. Empty
+        // (table, segment) slices are skipped without a job of their own.
+        val cuts = allDdl.map(_.getLong(0))
+        val segmentRows: TableId => Map[Int, Long] =
+          if (cuts.isEmpty) _ => Map.empty
+          else {
+            val seq = col(Changelog.SeqCol)
+            val segOf = cuts.zipWithIndex.tail
+              .foldLeft(when(seq < cuts.head, 0)) { case (w, (c, g)) => w.when(seq < c, g) }
+              .otherwise(cuts.length)
+            val keys = if (multi)
+              Seq(col(StreamingPipeline.RoutingCol), col(StreamingPipeline.RoutingDbCol))
+            else Seq(lit(null).cast("string"), lit(null).cast("string"))
+            val counts = data.groupBy((keys :+ segOf.as("__seg")): _*).count().collect()
+            tableId => counts.iterator
+              .filter(r => !multi || (!r.isNullAt(0) && StreamingPipeline.idMatches(
+                tableId, r.getString(0), Option(r.getString(1)))))
+              .toSeq.groupMapReduce(_.getInt(2))(_.getLong(3))(_ + _)
+          }
+
+        // Tables that share a sink are cut together at every DDL position
+        // any of them carries, and each segment goes to the runner as ONE
+        // SourceBatch — one write per sink per segment. Tables in
+        // different route components never cut each other's batches, so
+        // 1:1 multi-table topics keep one write per table per segment.
+        StreamingPipeline.routeComponents(activeTables.map(_._1), runner.sinksOf)
+          .foreach { component =>
+            val rowsIn = component.map(t => t -> segmentRows(t)).toMap
+            // the rows between cuts(lower) and cuts(upper) (-1 and
+            // cuts.length stand for the batch's edges): counted segments
+            // lower+1..upper
+            def emit(lower: Int, upper: Int): Unit = {
+              val bounds = Seq(
+                Option.when(lower >= 0)(col(Changelog.SeqCol) > cuts(lower)),
+                Option.when(upper < cuts.length)(col(Changelog.SeqCol) < cuts(upper))).flatten
+              val frames = component.filter(t => cuts.isEmpty ||
+                  (lower + 1 to upper).exists(g => rowsIn(t).getOrElse(g, 0L) > 0))
+                .map { t =>
+                  val tblData =
+                    if (multi) StreamingPipeline.routeByTableId(data, t) else data
+                  val slice = bounds.reduceOption(_ && _).fold(tblData)(tblData.where)
+                  // decode with the CURRENT upstream schema (what the
+                  // database is sending now — NOT the runner's transformed
+                  // sink plane): columns added/renamed by earlier DDL in
+                  // this very batch parse from this row on
+                  val cur = upstream.evolvedInfo(t).getOrElse(infoOf(t))
+                  t -> decodeSegment(slice, cur.schema)
+                }
+              if (frames.nonEmpty) runner.processBatch(SourceBatch(Nil, frames))
+            }
+            var prevCut = -1
+            allDdl.indices.foreach { g =>
+              val r = allDdl(g)
+              val named = component.filter(names(r, _))
+              if (named.nonEmpty) {
+                emit(prevCut, g)
+                named.foreach { t =>
+                  // an unparseable statement must not kill the stream — log
+                  // and keep consuming (the reference's history replay does
+                  // the same for statements it cannot interpret)
+                  val events =
+                    try DdlParser.parse(r.getString(1), t, ddlTypes)
+                    catch { case e: Exception =>
+                      System.err.println(s"[graft] skipping unparseable DDL at seq " +
+                        s"${r.getLong(0)}: ${r.getString(1).take(200)} (${e.getMessage})")
+                      Nil
+                    }
+                  events.foreach(upstream.apply)
+                  runner.processBatch(SourceBatch(events, Nil))
+                }
+                prevCut = g
+              }
+            }
+            emit(prevCut, cuts.length)
+          }
         if (!fastPath) sequenced.unpersist(false)
-        timed("schema-persist") { persistSchemaPlanes(checkpointLocation) }
+        persistSchemaPlanes(checkpointLocation)
         ()
       }
     checkpointLocation.fold(writer)(cp => writer.option("checkpointLocation", cp)).start()
@@ -619,10 +645,10 @@ object StreamingPipeline {
   /** Column holding the envelope's table name on multi-table topics. */
   val RoutingCol = "__tbl"
 
-  /** Max consuming actions (Σ per-table route fan-out) the DDL-free
-    * fast path will serve UNPERSISTED under a deterministic `order`:
-    * each action re-decodes the source, so R actions cost R decode
-    * passes vs the persist path's one decode + cache build + R cached
+  /** Max source passes (Σ per-table route fan-out) the DDL-free fast
+    * path will serve UNPERSISTED under a deterministic `order`: each
+    * routed (table, sink) pair re-decodes the source, so R passes cost R
+    * decodes vs the persist path's one decode + cache build + R cached
     * filters. Measured at 4 tables the re-decodes win (88–99k vs ~66k
     * ev/s — per-pass cost is small and the cache build is the largest
     * per-batch constant); the crossover sits well below a whole-database
@@ -636,6 +662,30 @@ object StreamingPipeline {
     * would deliver `db1.users` AND `db2.users` rows to both tables.
     */
   val RoutingDbCol = "__rdb"
+
+  /** Connected components of the table→sink route graph: two tables
+    * share a component when some chain of shared sinks links them.
+    * Components list in first-table order, tables in input order.
+    */
+  def routeComponents(tables: Seq[TableId],
+      sinksOf: TableId => Seq[TableId]): Seq[Seq[TableId]] = {
+    val parent = scala.collection.mutable.Map.empty[TableId, TableId]
+    def root(t: TableId): TableId =
+      if (parent(t) == t) t else { val r = root(parent(t)); parent(t) = r; r }
+    val firstBySink = scala.collection.mutable.Map.empty[TableId, TableId]
+    tables.foreach { t =>
+      parent(t) = t
+      sinksOf(t).foreach { s =>
+        firstBySink.get(s) match {
+          case Some(o) => parent(root(t)) = root(o)
+          case None => firstBySink(s) = t
+        }
+      }
+    }
+    val groups = scala.collection.mutable.LinkedHashMap.empty[TableId, Vector[TableId]]
+    tables.foreach(t => groups(root(t)) = groups.getOrElse(root(t), Vector.empty) :+ t)
+    groups.values.toSeq
+  }
 
   /** Materialize the routing key (table + database) once into the batch
     * frame — one JSON probe pass per record, stored with the persisted

@@ -10,9 +10,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Runs graft.Bench's own streamThroughput/ingestThroughput (identical
   * feed, sink, and steady-state protocol — no lookalike harness that
-  * could drift from the measured artifact). Set
-  * SPARK_GRAFT_STREAM_PROFILE=1 for the per-phase wall breakdown inside
-  * each micro-batch (cache+ddl scan / decode+write / schema-persist).
+  * could drift from the measured artifact). The per-layer split of each
+  * micro-batch comes from `python3 perfbench/run.py --trace 1`.
   */
 object StreamBench {
   def main(args: Array[String]): Unit = {

@@ -91,6 +91,42 @@ class RouteITCaseSpec extends SparkSpec {
       s"DataChangeEvent{tableId=$merged, before=[], after=[6, Frank, 30, student, null, male], op=INSERT}"))
   }
 
+  test("route merging: shards in one source batch reach the sink as one write") {
+    final class CountingSink extends graft.sinks.DataSink {
+      val inner = new ValuesDatabase
+      var writes = 0
+      override def applySchemaChange(e: SchemaChangeEvent): Unit = inner.applySchemaChange(e)
+      override def write(tableId: TableId, exploded: org.apache.spark.sql.DataFrame,
+          info: TableInfo): Unit = { writes += 1; inner.write(tableId, exploded, info) }
+    }
+    // no DDL between the data events: ValuesSource emits ONE SourceBatch
+    // carrying both shards
+    val events = Seq(
+      CreateTableEvent(t1, table1Info),
+      CreateTableEvent(t2, table1Info),
+      DataChangeEvent.insert(t1, Row(1, "Alice", 18)),
+      DataChangeEvent.insert(t2, Row(10, "Jack", 40)),
+      DataChangeEvent.insert(t1, Row(2, "Bob", 20)),
+      DataChangeEvent.update(t2, Row(10, "Jack", 40), Row(10, "Jack", 41)))
+    val pd = YamlPipelineParser.parse(
+      s"""source: { type: values }
+         |sink: { type: values }
+         |route:
+         |  - source-table: $ns.mytable[0-9]
+         |    sink-table: $merged
+         |pipeline: { schema.change.behavior: evolve }
+         |""".stripMargin)
+    val sink = new CountingSink
+    new PipelineRunner(spark, pd, new ValuesSource(events), sink).run()
+    assert(sink.writes === 1)
+    assert(sink.inner.eventLog === Seq(
+      s"CreateTableEvent{tableId=$merged, schema=columns={id INT, name STRING, age INT}, primaryKeys=id}",
+      s"DataChangeEvent{tableId=$merged, before=[], after=[1, Alice, 18], op=INSERT}",
+      s"DataChangeEvent{tableId=$merged, before=[], after=[2, Bob, 20], op=INSERT}",
+      s"DataChangeEvent{tableId=$merged, before=[], after=[10, Jack, 40], op=INSERT}",
+      s"DataChangeEvent{tableId=$merged, before=[10, Jack, 40], after=[10, Jack, 41], op=UPDATE}"))
+  }
+
   test("transform + route merging: computed column joins the merged schema (testTransformMergingWithRoute)") {
     // DIVERGENCE NOTE: the reference's variant also renames shard 1's
     // `name` mid-stream and maps post-rename payloads back through its

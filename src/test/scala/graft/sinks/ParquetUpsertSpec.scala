@@ -369,6 +369,66 @@ class ParquetUpsertSpec extends SparkSpec {
       (1L, "a2", Some(11)), (2L, "b2", Some(22)), (3L, "c", Some(33))))
   }
 
+  /** The sink's bucket of each LongType key (same hash as the sink). */
+  private def bucketsOf(ids: Seq[Long], n: Int): Map[Long, Int] =
+    ids.toDF("id").select(col("id"), pmod(hash(col("id")), lit(n))).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+
+  test("COW: buckets rewritten before and after an INT->BIGINT widen merge and read together") {
+    // a widened write that touches only some buckets leaves the table
+    // with INT32 and INT64 bucket files side by side; the next merge and
+    // every read must take both, not the first file's schema for all
+    val dir = java.nio.file.Files.createTempDirectory("pqsink_widen").toFile
+    val sink = new ParquetUpsertSink(spark, dir.getAbsolutePath, numBuckets = 4)
+    val tid = TableId.parse("db.w")
+    def info(qty: DataType) = TableInfo(
+      StructType(Seq(StructField("id", LongType), StructField("qty", qty))),
+      primaryKeys = Seq("id"))
+    val ids = 1L to 40L
+    sink.write(tid, ids.map(i => (i, i.toInt, "+I", i))
+      .toDF("id", "qty", Changelog.OpCol, Changelog.SeqCol), info(IntegerType))
+    val bucket = bucketsOf(ids, 4)
+    // outside the lowest bucket, whose dir lists first
+    val k = ids.find(bucket(_) != bucket.values.min).get
+    sink.write(tid, Seq((k, 3000000000L, "+U", 100L))
+      .toDF("id", "qty", Changelog.OpCol, Changelog.SeqCol), info(LongType))
+    def state = sink.read(tid).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(state === ids.map(i => i -> (if (i == k) 3000000000L else i)).toMap)
+    // every bucket touched: the merge reads both file shapes
+    sink.write(tid, ids.filter(_ != k).map(i => (i, i * 10, "+U", 200L + i))
+      .toDF("id", "qty", Changelog.OpCol, Changelog.SeqCol), info(LongType))
+    assert(state === ids.map(i => i -> (if (i == k) 3000000000L else i * 10)).toMap)
+  }
+
+  test("COW: an ADD COLUMN written to some buckets keeps its values through later merges") {
+    val dir = java.nio.file.Files.createTempDirectory("pqsink_addcol").toFile
+    val sink = new ParquetUpsertSink(spark, dir.getAbsolutePath, numBuckets = 4)
+    val tid = TableId.parse("db.a")
+    val narrow = TableInfo(
+      StructType(Seq(StructField("id", LongType), StructField("v", StringType))),
+      primaryKeys = Seq("id"))
+    val wide = TableInfo(narrow.schema.add("note", StringType), primaryKeys = Seq("id"))
+    val ids = 1L to 40L
+    sink.write(tid, ids.map(i => (i, s"v$i", "+I", i))
+      .toDF("id", "v", Changelog.OpCol, Changelog.SeqCol), narrow)
+    val bucket = bucketsOf(ids, 4)
+    val lowest = bucket.values.min
+    val k = ids.find(bucket(_) != lowest).get
+    sink.write(tid, Seq((k, s"v$k", "n", "+U", 100L))
+      .toDF("id", "v", "note", Changelog.OpCol, Changelog.SeqCol), wide)
+    def notes = sink.read(tid).collect()
+      .map(r => r.getAs[Long]("id") -> Option(r.getAs[String]("note"))).toMap
+    assert(notes === ids.map(i => i -> (if (i == k) Some("n") else None)).toMap)
+    // touch the lowest bucket (old shape) and k's bucket without k itself
+    val j = ids.find(bucket(_) == lowest).get
+    val m = ids.find(i => i != k && bucket(i) == bucket(k)).get
+    sink.write(tid, Seq[(Long, String, String, String, Long)](
+        (j, "j2", "x", "+U", 200L), (m, "m2", null, "+U", 201L))
+      .toDF("id", "v", "note", Changelog.OpCol, Changelog.SeqCol), wide)
+    assert(notes === ids.map(i => i ->
+      (if (i == k) Some("n") else if (i == j) Some("x") else None)).toMap)
+  }
+
   test("truncate clears data but keeps the table writable; drop removes it") {
     import graft.model.{CreateTableEvent, DropTableEvent, TruncateTableEvent}
     val dir = java.nio.file.Files.createTempDirectory("pqsink_trunc").toFile

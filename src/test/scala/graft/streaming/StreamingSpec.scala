@@ -546,6 +546,56 @@ class StreamingSpec extends SparkSpec {
     assert(a === b)
   }
 
+  test("many-to-one route: one write per sink per DDL segment, cross-shard keys in log order") {
+    // three shards merge into one sink table; an ALTER on one shard mid-
+    // batch cuts every shard of the component at its position, and each
+    // segment reaches the sink as ONE write carrying all shards' rows
+    final class CountingSink extends graft.sinks.DataSink {
+      val inner = new ValuesDatabase
+      val writes = scala.collection.mutable.ArrayBuffer.empty[TableId]
+      override def applySchemaChange(e: graft.model.SchemaChangeEvent): Unit =
+        inner.applySchemaChange(e)
+      override def write(tableId: TableId, exploded: org.apache.spark.sql.DataFrame,
+          info: TableInfo): Unit = { writes += tableId; inner.write(tableId, exploded, info) }
+    }
+    def row(t: String, after: String) =
+      s"""{"before":null,"after":$after,"op":"c","source":{"db":"db","table":"$t"}}"""
+    val lines = Seq(
+      row("s1", """{"id":1,"v":"a"}"""),
+      row("s2", """{"id":2,"v":"b"}"""),
+      row("s3", """{"id":3,"v":"c"}"""),
+      """{"source":{"db":"db","table":"s2"},"ddl":"ALTER TABLE s2 ADD COLUMN age INT"}""",
+      row("s2", """{"id":4,"v":"d","age":40}"""),
+      // id 5 collides across shards inside one segment: s3 writes first in
+      // the log, s1 (declared before s3) last — the log order must win
+      row("s3", """{"id":5,"v":"early"}"""),
+      """{"before":{"id":1,"v":"a"},"after":{"id":1,"v":"a2"},"op":"u","source":{"db":"db","table":"s1"}}""",
+      row("s1", """{"id":5,"v":"late"}"""))
+    val dir = java.nio.file.Files.createTempDirectory("dbz_merge").toFile
+    java.nio.file.Files.write(new java.io.File(dir, "feed.json").toPath,
+      lines.mkString("\n").getBytes("UTF-8"))
+    val all = TableId.parse("db.all")
+    val shards = Seq("s1", "s2", "s3").map(t => TableId.parse(s"db.$t") -> tableInfo)
+    val sink = new CountingSink
+    val sp = new StreamingPipeline(spark,
+      pd.copy(routes = Seq(graft.route.RouteRule("db.s\\.*", "db.all"))), sink)
+    val q = sp.startMultiFromDebeziumJson(
+      StreamingPipeline.fileJsonStream(spark, dir.getAbsolutePath), shards)
+    q.awaitTermination(60000)
+    assert(sink.writes === Seq(all, all)) // before and after the ALTER
+    assert(sink.inner.info(all).get.fieldNames === Seq("id", "v", "age"))
+    assert(sink.inner.results(all).toSet === Set("db.all:1;a2;null", "db.all:2;b;null",
+      "db.all:3;c;null", "db.all:4;d;40", "db.all:5;late;null"))
+  }
+
+  test("route components: tables sharing a sink group together, others stay apart") {
+    val Seq(a, b, c, d) = Seq("a", "b", "c", "d").map(t => TableId.parse(s"db.$t"))
+    val sinks = Map(a -> Seq(TableId.parse("x")), b -> Seq(TableId.parse("y")),
+      c -> Seq(TableId.parse("z"), TableId.parse("x")), d -> Seq(TableId.parse("w")))
+    assert(StreamingPipeline.routeComponents(Seq(a, b, c, d), sinks) ===
+      Seq(Seq(a, c), Seq(b), Seq(d)))
+  }
+
   test("deterministic order with mid-batch DDL falls back to the segmented persist path") {
     // DDL present → the persist-first path runs even with an order
     // expression; segmentation must still apply the ALTER at its log
